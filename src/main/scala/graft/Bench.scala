@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -71,7 +72,10 @@ object Bench {
     // session-scoped stage memos are evicted between passes so pass 2
     // re-pays exactly what pass 1 did (otherwise the stage query that
     // funds the shared dedupe+merge would report a near-zero min).
-    def timedPass(): Map[String, Double] = benched.map { case (name, fn) =>
+    // A query that throws is an ERROR, never a time: a fast failure
+    // must not read as a speed-up. Its row is left out of the times
+    // and the total, and listed under "errors" instead.
+    def timedPass(): Map[String, Either[String, Double]] = benched.map { case (name, fn) =>
       // One-time layout setup (bucketed tables etc.) runs untimed: a
       // deployment pays it once and amortizes it over every subsequent
       // query, so timing it per-run would misrepresent the device.
@@ -91,11 +95,15 @@ object Bench {
       // readable. Thread-local; cleared after the body.
       spark.sparkContext.setJobDescription(name)
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val dt = (System.nanoTime() - t0) / 1e9
+      val r = try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] ERROR $name:")
+        e.printStackTrace()
+        Left(s"${e.getClass.getName}: ${e.getMessage}")
+      }
       spark.sparkContext.setJobDescription(null)
       Scratch.releaseAll() // drop per-query cached intermediates
-      name -> dt
+      name -> r
     }
     def loadAvg(): Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
@@ -117,7 +125,10 @@ object Bench {
     Scratch.releaseAll()
     val pass2 = timedPass()
     val load1 = loadAvg()
-    val results = pass1.map { case (name, v1) => name -> math.min(v1, pass2(name)) }
+    def ok(p: Map[String, Either[String, Double]]) = p.collect { case (n, Right(v)) => n -> v }
+    val (ok1, ok2) = (ok(pass1), ok(pass2))
+    val errors = (pass1.toSeq ++ pass2.toSeq).collect { case (n, Left(e)) => n -> e }.toMap
+    val results = ok1.collect { case (n, v1) if ok2.contains(n) => n -> math.min(v1, ok2(n)) }
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // Full-fidelity copy (complete query names, full float precision,
     // both raw passes, the run's load averages) goes to a file: the
@@ -126,8 +137,15 @@ object Bench {
     // record.
     def full(m: Map[String, Double]) =
       m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def str(v: String) = "\"" + v.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
     val qs = full(results)
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","timing":"min_of_2","load_avg_start":$load0,"load_avg_end":$load1,"mem_avail_gb_start":$mem0,"mem_avail_gb_end":${memAvailGb()},"queries":$qs,"pass1":${full(pass1)},"pass2":${full(pass2)},"sf":"$sfDir"}"""
+    val errs = errors.map { case (k, v) => str(k) + ":" + str(v) }.mkString("{", ",", "}")
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","timing":"min_of_2","load_avg_start":$load0,"load_avg_end":$load1,"mem_avail_gb_start":$mem0,"mem_avail_gb_end":${memAvailGb()},"queries":$qs,"errors":$errs,"pass1":${full(ok1)},"pass2":${full(ok2)},"sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), line + "\n")
     catch { case _: Throwable => () }
     // The stdout line the driver parses is kept compact enough to fit
@@ -138,8 +156,9 @@ object Bench {
     def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val shortQs = results.map { case (k, v) => s"\"" + k.takeWhile(_ != '_') + "\":" + fmt(v) }
       .mkString("{", ",", "}")
+    val shortErrs = errors.keys.map(k => str(k.takeWhile(_ != '_'))).mkString("[", ",", "]")
     spark.stop()
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timing":"min_of_2","load":[${fmt(load0)},${fmt(load1)}],"mem_gb":[$mem0,${memAvailGb()}],"queries":$shortQs,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timing":"min_of_2","load":[${fmt(load0)},${fmt(load1)}],"mem_gb":[$mem0,${memAvailGb()}],"queries":$shortQs,"errors":$shortErrs,"sf":"$sfDir"}""")
     System.out.flush()
   }
 }

@@ -386,7 +386,7 @@ object Pipeline {
     // generation (key join + flag aggregation + side-info joins) would
     // execute once PER BRANCH.
     val anyNonNative = nonNativeAcc.value > 0
-    val pairs = if (anyNonNative) graft.Scratch.scoped(matches) else matches
+    val pairs = if (anyNonNative) graft.Scratch.cache(matches) else matches
 
     def has(kt: String) = col(s"f_$kt") === 1
     val emailOv = has("em"); val phoneOv = has("ph")
@@ -880,7 +880,7 @@ object Pipeline {
     }
     // Scoped: shared by the contacts and lineage sinks of ONE pipeline
     // run, released by the harness afterwards (not session-pinned).
-    val mergedPersisted = graft.Scratch.scoped(merged)
+    val mergedPersisted = graft.Scratch.cache(merged)
     val out = mergedPersisted.map(_._1)
     val lineage = mergedPersisted.flatMap(_._2)
     (out, lineage)
@@ -918,7 +918,7 @@ object Pipeline {
       val members = it.map(_._1).toSeq.sortBy(_.row_id).map(c => (c, c))
       ContactLogic.mergeCluster(members)
     }
-    val t = graft.Scratch.scoped(tupled)
+    val t = graft.Scratch.cache(tupled)
     (t.map(_._1), t.flatMap(_._2))
   }
 

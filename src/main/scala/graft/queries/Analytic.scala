@@ -721,7 +721,7 @@ object Analytic {
     // Persisted user-bucketed STORE (r16 VERDICT task 4): the merge's
     // full-outer joins key on user_id, so the standing side's scan
     // carries the hash distribution and contributes zero exchange —
-    // the fold shuffles only the batch aggregates (ExplainR17 audit).
+    // the fold shuffles only the batch aggregates (r17 plan audit).
     bucketedStore(s, dir, "funstates_pre", "user_id")(funnelStates(
       t(s, dir, "events").where(col("ts") < lit(AnalyticCutoff).cast("timestamp"))))
 
@@ -794,7 +794,7 @@ object Analytic {
     // each consumer re-exchanged the cached batch. Per-user day
     // counts are bounded by the window's day span, so the narrower
     // key cannot skew. Rows are unchanged.
-    val nd = graft.Scratch.sized(
+    val nd = graft.Scratch.cache(
       batch.select(col("user_id"), to_date(col("ts")).as("day"))
       .repartition(col("user_id")).distinct()
       .crossJoin(broadcast(maxDay))
@@ -804,7 +804,7 @@ object Analytic {
           col("day").cast("string"),
           lit(" does not postdate the standing activity (max day "),
           col("_max_day").cast("string"), lit(")"))))
-          .otherwise(col("day")).as("day")))
+          .otherwise(col("day")).as("day")), sized = true)
     // Eager materialization on request (r21 — behavioralEpoch's cohort
     // note: an unmaterialized AQE cache reports UnknownPartitioning,
     // so both consumers re-exchange; built, they elide — measured −4
@@ -1042,8 +1042,8 @@ object Analytic {
   private def q125Arts(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
     val (f0, c0) = retentionState(t(s, dir, "events"))
-    val f = graft.Scratch.sizedFenced(f0)
-    val cells = graft.Scratch.sizedFenced(c0)
+    val f = graft.Scratch.cache(f0, sized = true, fenced = true)
+    val cells = graft.Scratch.cache(c0, sized = true, fenced = true)
     f.count(); cells.count()
     (f, cells)
   }
@@ -1085,7 +1085,7 @@ object Analytic {
     * (q125's prepare note applies). */
   private def q126Arts(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val st = graft.Scratch.sizedFenced(funnelStates(t(s, dir, "events")))
+    val st = graft.Scratch.cache(funnelStates(t(s, dir, "events")), sized = true, fenced = true)
     st.count()
     st
   }
@@ -1339,14 +1339,14 @@ object Analytic {
     * pattern, so the gate costs no extra pass. */
   private[graft] def dedupBatchGated(batch: DataFrame,
       standingIds: DataFrame, broadcastIdCap: Long): DataFrame = {
-    val uniq = graft.Scratch.sized(batch.dropDuplicates("event_id"))
+    val uniq = graft.Scratch.cache(batch.dropDuplicates("event_id"), sized = true)
     // The RESULT is Scratch-scoped too (r20 optimization): the fold a
     // deduped batch feeds reads it more than once (mergeSessions'
     // touched-split, the funnel windows), and every unmaterialized
     // reference re-ran this device — including its corpus-sized
     // standing-store scan, the one pass the scaladoc promises is paid
     // once. Batch-bounded (it is a subset of `uniq`).
-    graft.Scratch.sized(
+    graft.Scratch.cache(
       if (uniq.count() <= broadcastIdCap) {
         val seen = standingIds.join(broadcast(uniq.select(col("event_id"))),
           Seq("event_id"), "left_semi")
@@ -1358,7 +1358,7 @@ object Analytic {
         // shuffle, which is the batch's write amplification floor
         // anyway.
         uniq.join(standingIds, Seq("event_id"), "left_anti")
-      })
+      }, sized = true)
   }
 
   /** The registered q133 redelivery: every event whose
@@ -1512,7 +1512,7 @@ object Analytic {
       // inline cost the body a corpus scan per reference, and the
       // feed is broadcast into two joins here). The oracle keeps
       // the events-derived DEFINITION inline.
-      val requests = graft.Scratch.sized(EpochOps.requestStore(s, dir))
+      val requests = graft.Scratch.cache(EpochOps.requestStore(s, dir), sized = true)
       eraseSessionsBeforeT(
         prepTake(s, dir, "prep136")(q136Arts(s, dir)), e, requests)
         .orderBy(col("user_id"), col("start_us"))
@@ -1625,12 +1625,12 @@ object Analytic {
       val (f, cells) = prepTake(s, dir, "prep137")(q137Arts(s, dir))
       // Privacy feed from its bounded store (r20 — see q136's note);
       // the oracle keeps the events-derived definition inline.
-      val requests = graft.Scratch.sized(EpochOps.requestStore(s, dir))
+      val requests = graft.Scratch.cache(EpochOps.requestStore(s, dir), sized = true)
       // Both activity relations derive from one cohort slice (r20:
       // the [[cohortEvents]] refactor — the semi-join the old
       // fullActivity branch paid was subsumed by the inner join),
       // Scratch-scoped because fullActivity and postT both read it.
-      val cohort = graft.Scratch.sized(cohortEvents(e, requests))
+      val cohort = graft.Scratch.cache(cohortEvents(e, requests), sized = true)
       val fullActivity = cohort
         .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
       val postT = cohort.where(unix_micros(col("ts")) >= col("req_us"))
@@ -1843,7 +1843,7 @@ object Analytic {
       val e = t(s, dir, "events")
       val states = prepTake(s, dir, "prep143")(q143Arts(s, dir))
       // Privacy feed from its bounded store (r20 — see q136's note).
-      val requests = graft.Scratch.sized(EpochOps.requestStore(s, dir))
+      val requests = graft.Scratch.cache(EpochOps.requestStore(s, dir), sized = true)
       funnelReport(eraseFunnelBeforeT(states, e, requests))
     },
     // q130's VERBATIM rebuild, via the package object rather than

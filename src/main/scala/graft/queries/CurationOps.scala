@@ -92,12 +92,12 @@ object CurationOps {
     * = 0` forces the join path for tests (Q80PathsSpec). */
   private[graft] def boilerplateDf(s: SparkSession, dir: String,
       maxBroadcastShingles: Long = 4000000L): DataFrame = {
-    // Scratch.scoped is LOAD-BEARING beyond reuse: it is the
+    // The Scratch cache is LOAD-BEARING beyond reuse: it is the
     // materialization boundary that stops Catalyst's projection
     // collapse from inlining the split() into every interpreted
     // transform-lambda element access (O(tokens²) per doc — measured
     // 925 s vs 51 s on the 2M-doc corpus). See the q51 sig note.
-    val base = graft.Scratch.scoped(t(s, dir, "documents")
+    val base = graft.Scratch.cache(t(s, dir, "documents")
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .where(size(col("toks")) >= 3)
       .select(col("doc_id"), shingleHashes3(col("toks")).as("sh")))
@@ -684,7 +684,7 @@ object CurationOps {
       // totals, per-doc scoring) would otherwise each re-scan the
       // corpus and re-pay the md5 bigram kernel — 4 scans visible in
       // the un-persisted plan, the dominant cost at 2M docs.
-      val g = graft.Scratch.scoped(t(s, dir, "documents")
+      val g = graft.Scratch.cache(t(s, dir, "documents")
         .select(col("doc_id"), tgtPred.as("tgt"),
           tokens(col("text")).as("toks"))
         .where(size(col("toks")) >= 2)

@@ -117,8 +117,8 @@ object DedupOps {
       .select(col("doc_id"), (col("h0") % P).as("h"))
     val minAggs = AB.zipWithIndex.map { case ((a, b), i) =>
       min((lit(a) * col("h") + lit(b)) % P).as(s"m$i") }
-    val sig = graft.Scratch.sized(hashed.groupBy(col("doc_id"))
-      .agg(minAggs.head, minAggs.tail :+ sort_array(collect_set(col("h"))).as("hs"): _*))
+    val sig = graft.Scratch.cache(hashed.groupBy(col("doc_id"))
+      .agg(minAggs.head, minAggs.tail :+ sort_array(collect_set(col("h"))).as("hs"): _*), sized = true)
     val banded = sig.select(col("doc_id"), expr(
       (0 until Bands).map { bnd =>
         val key = (0 until RowsPerBand).map(r => s"m${bnd * RowsPerBand + r}")
@@ -248,7 +248,7 @@ object DedupOps {
       .select(col("doc_id"), (col("h0") % P).as("h"))
     val minAggs = AB.zipWithIndex.map { case ((a, b), i) =>
       min((lit(a) * col("h") + lit(b)) % P).as(s"m$i") }
-    val sig0 = graft.Scratch.scoped(
+    val sig0 = graft.Scratch.cache(
       hashed.groupBy(col("doc_id")).agg(minAggs.head, minAggs.tail: _*))
     val banded = sig0.select(col("doc_id"), expr(
       (0 until Bands).map { bnd =>
@@ -256,7 +256,7 @@ object DedupOps {
           .mkString("concat_ws(',', ", ", ", ")")
         s"$bnd, $key"
       }.mkString(s"stack($Bands, ", ", ", ") as (band, key)")))
-    val cand = graft.Scratch.scoped(banded.as("a")
+    val cand = graft.Scratch.cache(banded.as("a")
       .join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -392,11 +392,11 @@ object DedupOps {
       // Plan-fenced like q117's standing relations: the CC below
       // issues several actions and each re-analyzed the minhash
       // pipeline's plan. Deferred in r14 as window noise; the r15
-      // same-window A/B (ProfFence3: registered 2.97/2.10 s vs
+      // same-window A/B (registered 2.97/2.10 s vs
       // fenced 2.19/1.72 s at sf0.1, both iterations in favor)
       // settled it as a real ~15-25 % win.
-      val pairs = graft.Scratch.fenced(minhashPairs(s, dir)
-        .select(col("doc_a").as("src"), col("doc_b").as("dst")))
+      val pairs = graft.Scratch.cache(minhashPairs(s, dir)
+        .select(col("doc_a").as("src"), col("doc_b").as("dst")), fenced = true)
         .as[graft.etl.Pipeline.Edge]
       val verts = pairs.select(col("src")).union(pairs.select(col("dst")))
         .distinct().as[java.lang.Long]
@@ -657,7 +657,7 @@ object DedupOps {
     // Per-doc distinct gram ARRAYS in one narrow projection: gram
     // extraction is per-row work, so an explode → groupBy round-trip
     // to rebuild per-doc sets would be two avoidable shuffles.
-    val docGrams = graft.Scratch.scoped(t(s, dir, "documents")
+    val docGrams = graft.Scratch.cache(t(s, dir, "documents")
       .repartition(s.sparkContext.defaultParallelism)
       .select(col("doc_id"), norm.as("t"))
       .where(length(col("t")) >= 4)
@@ -793,7 +793,7 @@ object DedupOps {
   private def prefixBroadcastPath(docGrams: DataFrame): DataFrame = {
     val spark = docGrams.sparkSession
     import spark.implicits._
-    val packed = graft.Scratch.scoped(docGrams
+    val packed = graft.Scratch.cache(docGrams
       .select(col("doc_id"), packGrams(col("grams")).as("pg")))
     // Bounded collect: callers reach this path only under the
     // maxBroadcastDocs gate (<= DenseVerifyMaxDocs docs x ~7 KB/doc
@@ -859,7 +859,7 @@ object DedupOps {
         array_sort(transform(col("gdf"), x => x("tok"))).as("g"),
         expr("slice(transform(gdf, x -> x.tok), 1, size(gdf) DIV 2 + 1)").as("pref"),
         size(col("gdf")).as("n"))
-    val grams = graft.Scratch.scoped(grams0) // see q51 sig note
+    val grams = graft.Scratch.cache(grams0) // see q51 sig note
     val pref = grams.select(col("doc_id"), col("n"), explode(col("pref")).as("tok"))
     val cand = pref.as("a").join(pref.as("b"),
         col("a.tok") === col("b.tok") &&
@@ -1086,7 +1086,7 @@ object DedupOps {
       dir: String, bands: Int, bits: Int, cap: Int,
       threshold: Double): DataFrame = {
     val dot = (x: Column, y: Column) => graft.plans.VecDotProduct(x, y)
-    val e = graft.Scratch.scoped(t(s, dir, "embeddings")
+    val e = graft.Scratch.cache(t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").as("v"))
       .withColumn("norm", sqrt(dot(col("v"), col("v")))))
     val banded = e.select(col("vec_id"),
@@ -1175,7 +1175,7 @@ object DedupOps {
       dir: String, bands: Int, bits: Int, cap: Int,
       threshold: Double): DataFrame = {
       val dot = (x: Column, y: Column) => graft.plans.VecDotProduct(x, y)
-      val e = graft.Scratch.scoped(t(s, dir, "embeddings")
+      val e = graft.Scratch.cache(t(s, dir, "embeddings")
         .select(col("vec_id"),
           (h60(concat(lit("ingest:"), col("vec_id"))) % 10 === 0).as("incoming"),
           col("embedding").as("v"))
@@ -1276,10 +1276,10 @@ object DedupOps {
     (s, dir) => {
       import s.implicits._
       // Plan-fenced: identical pairs->CC shape to q73, whose r15
-      // same-window A/B (ProfFence3) settled the fence as a real win.
-      val pairs = graft.Scratch.fenced(
+      // same-window A/B settled the fence as a real win.
+      val pairs = graft.Scratch.cache(
         embeddingPairsScaled(s, dir, Q91Bands, Q91Bits, Q91Cap, Q91Threshold)
-          .select(col("vec_a").as("src"), col("vec_b").as("dst")))
+          .select(col("vec_a").as("src"), col("vec_b").as("dst")), fenced = true)
         .as[graft.etl.Pipeline.Edge]
       val verts = pairs.select(col("src")).union(pairs.select(col("dst")))
         .distinct().as[java.lang.Long]
@@ -1366,8 +1366,8 @@ object DedupOps {
     def vote(pfx: String) = (0 until 32).map(b =>
       when(col(s"$pfx$b") * 2 > col("n"), lit(1L << b)).otherwise(lit(0L)))
       .reduce(_ + _)
-    val base = graft.Scratch.sized(counted.select(col("doc_id"),
-      vote("hi").as("shi"), vote("lo").as("slo")))
+    val base = graft.Scratch.cache(counted.select(col("doc_id"),
+      vote("hi").as("shi"), vote("lo").as("slo")), sized = true)
     val bandExprs = (0 until nBands).map { j =>
       val src = if (j < bandsPerHalf) "shi" else "slo"
       val sh = (j % bandsPerHalf) * bandBits
@@ -1514,8 +1514,8 @@ object DedupOps {
       .select(col("doc_id"), (col("h0") % P).as("h"))
     val minAggs = AB94.zipWithIndex.map { case ((a, b), i) =>
       min((lit(a) * col("h") + lit(b)) % P).as(s"m$i") }
-    val sig = graft.Scratch.sized(hashed.groupBy(col("doc_id"))
-      .agg(minAggs.head, minAggs.tail :+ sort_array(collect_set(col("h"))).as("hs"): _*))
+    val sig = graft.Scratch.cache(hashed.groupBy(col("doc_id"))
+      .agg(minAggs.head, minAggs.tail :+ sort_array(collect_set(col("h"))).as("hs"): _*), sized = true)
     val banded = sig.select(col("doc_id"), expr(
       (0 until Bands94).map { bnd =>
         val key = (0 until RowsPerBand94).map(r => s"m${bnd * RowsPerBand94 + r}")
@@ -1661,7 +1661,7 @@ object DedupOps {
       .select(col("doc_id"), (col("h0") % P).as("h"))
     val minAggs = AB.zipWithIndex.map { case ((a, b), i) =>
       min((lit(a) * col("h") + lit(b)) % P).as(s"m$i") }
-    val sig = graft.Scratch.scoped(hashed.groupBy(col("doc_id"))
+    val sig = graft.Scratch.cache(hashed.groupBy(col("doc_id"))
       .agg(minAggs.head, minAggs.tail :+ sort_array(collect_set(col("h"))).as("hs"): _*))
     val banded = sig.select(col("doc_id"), expr(
       (0 until Bands).map { bnd =>
@@ -1693,8 +1693,8 @@ object DedupOps {
   private[graft] def q96Arts(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
     val (keptIdx0, idxHs0) = q96IndexSide(s, dir)
-    val keptIdx = graft.Scratch.sizedFenced(keptIdx0)
-    val idxHs = graft.Scratch.sizedFenced(idxHs0)
+    val keptIdx = graft.Scratch.cache(keptIdx0, sized = true, fenced = true)
+    val idxHs = graft.Scratch.cache(idxHs0, sized = true, fenced = true)
     keptIdx.count(); idxHs.count()
     (keptIdx, idxHs)
   }
@@ -1715,7 +1715,7 @@ object DedupOps {
       .select(col("doc_id"), (col("h0") % P).as("h"))
     val minAggs = AB.zipWithIndex.map { case ((a, b), i) =>
       min((lit(a) * col("h") + lit(b)) % P).as(s"m$i") }
-    val sig = graft.Scratch.scoped(hashed.groupBy(col("doc_id"))
+    val sig = graft.Scratch.cache(hashed.groupBy(col("doc_id"))
       .agg(minAggs.head, minAggs.tail :+ sort_array(collect_set(col("h"))).as("hs"): _*))
     val banded = sig.select(col("doc_id"), expr(
       (0 until Bands).map { bnd =>
@@ -1950,8 +1950,8 @@ object DedupOps {
     // batch's banded rows (the operator's own documented scale shape).
     // Single downstream consumer, shallow plan — the fence's
     // re-analysis savings don't apply here.
-    val standing = graft.Scratch.sized(
-      cappedIndexBuckets(bandedFor(s, dir, !inc), Q96Cap))
+    val standing = graft.Scratch.cache(
+      cappedIndexBuckets(bandedFor(s, dir, !inc), Q96Cap), sized = true)
     standing.count()
     standing
   }
@@ -2042,8 +2042,8 @@ object DedupOps {
       dir: String): DataFrame = {
     val inc = h60(concat(lit("ingest:"), col("vec_id"))) % 10 === 0
     // Scoped, not fenced — q101Arts' partitioning-preservation note.
-    val standing = graft.Scratch.sized(
-      cappedIndexBuckets(embBandedFor(s, dir, !inc), Q91Cap))
+    val standing = graft.Scratch.cache(
+      cappedIndexBuckets(embBandedFor(s, dir, !inc), Q91Cap), sized = true)
     standing.count()
     standing
   }
@@ -2187,7 +2187,7 @@ object DedupOps {
         .select(col("doc_id"), col("incoming"), (col("h0") % P).as("h"))
       val minAggs = AB.zipWithIndex.map { case ((a, b), i) =>
         min((lit(a) * col("h") + lit(b)) % P).as(s"m$i") }
-      val sig = graft.Scratch.scoped(hashed.groupBy(col("doc_id"), col("incoming"))
+      val sig = graft.Scratch.cache(hashed.groupBy(col("doc_id"), col("incoming"))
         .agg(minAggs.head, minAggs.tail :+ sort_array(collect_set(col("h"))).as("hs"): _*))
       val banded = sig.select(col("doc_id"), col("incoming"), expr(
         (0 until Bands).map { bnd =>
@@ -2222,8 +2222,8 @@ object DedupOps {
         .select(col("doc_id").as("inc_doc"), col("band"), col("key"))
         .join(keptIdx, Seq("band", "key"))
         .select(col("inc_doc"), col("idx_doc")).distinct()
-      val matches = graft.Scratch.sized(verify(cand, "inc_doc", "idx_doc")
-        .select(col("inc_doc").as("src"), col("idx_doc").as("dst")))
+      val matches = graft.Scratch.cache(verify(cand, "inc_doc", "idx_doc")
+        .select(col("inc_doc").as("src"), col("idx_doc").as("dst")), sized = true)
       (idxPairs, matches)
   }
 
@@ -2247,7 +2247,7 @@ object DedupOps {
       dir: String): (DataFrame, DataFrame) = {
     val inc = h60(concat(lit("ingest:"), col("doc_id"))) % 10 === 0
     val (idxPairs, matches) = q105Pairs(s, dir, !inc, inc)
-    (graft.Scratch.sized(componentsOf(idxPairs)), matches)
+    (graft.Scratch.cache(componentsOf(idxPairs), sized = true), matches)
   }
 
   /** q105's standing artifacts — the stored component assignment and
@@ -2255,8 +2255,8 @@ object DedupOps {
   private[graft] def q105Arts(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
     val (standing0, matches0) = q105Relations(s, dir)
-    val standing = graft.Scratch.sizedFenced(standing0)
-    val matches = graft.Scratch.sizedFenced(matches0)
+    val standing = graft.Scratch.cache(standing0, sized = true, fenced = true)
+    val matches = graft.Scratch.cache(matches0, sized = true, fenced = true)
     standing.count(); matches.count()
     (standing, matches)
   }
@@ -2383,9 +2383,9 @@ object DedupOps {
     (s, dir) => {
       import s.implicits._
       // Plan-fenced: identical pairs->CC shape to q73, whose r15
-      // same-window A/B (ProfFence3) settled the fence as a real win.
-      val pairs = graft.Scratch.fenced(minhashPairs(s, dir)
-        .select(col("doc_a").as("src"), col("doc_b").as("dst")))
+      // same-window A/B settled the fence as a real win.
+      val pairs = graft.Scratch.cache(minhashPairs(s, dir)
+        .select(col("doc_a").as("src"), col("doc_b").as("dst")), fenced = true)
         .as[graft.etl.Pipeline.Edge]
       val verts = pairs.select(col("src")).union(pairs.select(col("dst")))
         .distinct().as[java.lang.Long]
@@ -2523,15 +2523,15 @@ object DedupOps {
     * tombstone persistence on crafted fixtures AND replays
     * removal == from-scratch on the real sf bandings under
     * tightened caps / removal fractions where each branch provably
-    * fires (census in the ProbeRemove tool). */
+    * fires (r14 bucket-size census of both sf bandings). */
   /** q116's standing artifacts — the persisted banding reverse
     * relation and the capped index built from it — fenced and
     * MATERIALIZED (the count pays both caches), so a prepared run's
     * timed body is the takedown alone. */
   private def q116Arts(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val banding = graft.Scratch.sizedFenced(bandedFor(s, dir, lit(true)))
-    val standing = graft.Scratch.sizedFenced(cappedIndexBuckets(banding, Q96Cap))
+    val banding = graft.Scratch.cache(bandedFor(s, dir, lit(true)), sized = true, fenced = true)
+    val standing = graft.Scratch.cache(cappedIndexBuckets(banding, Q96Cap), sized = true, fenced = true)
     standing.count()
     (banding, standing)
   }
@@ -2626,16 +2626,16 @@ object DedupOps {
     // removal batch's source scan) per consumer. All three are
     // batch/touched-bounded: the removal ids, the touched component
     // ids, and the touched components' surviving edges.
-    val rem = graft.Scratch.sized(removed.select(col("id")))
-    val touched = graft.Scratch.sized(
+    val rem = graft.Scratch.cache(removed.select(col("id")), sized = true)
+    val touched = graft.Scratch.cache(
       standing.join(rem, Seq("id"), "left_semi")
-        .select(col("comp")).distinct())
-    val survEdges = graft.Scratch.sized(pairs
+        .select(col("comp")).distinct(), sized = true)
+    val survEdges = graft.Scratch.cache(pairs
       .join(standing.select(col("id").as("src"), col("comp")), Seq("src"))
       .join(touched, Seq("comp"), "left_semi")
       .join(rem.select(col("id").as("src")), Seq("src"), "left_anti")
       .join(rem.select(col("id").as("dst")), Seq("dst"), "left_anti")
-      .select(col("src"), col("dst")))
+      .select(col("src"), col("dst")), sized = true)
     val verts = survEdges.select(col("src")).union(survEdges.select(col("dst")))
       .distinct().as[java.lang.Long]
     val relabeled = graft.etl.Pipeline.connectedComponents(
@@ -2665,13 +2665,13 @@ object DedupOps {
     * component assignment over it. Plan-fenced, not just cached:
     * removeFromComponents' CC issues several actions over these
     * relations and each re-analyzed the minhash pipeline's full
-    * plan — ~0.8 s of driver planning at sf0.1 (see Scratch.fenced).
+    * plan — ~0.8 s of driver planning at sf0.1 (see Scratch.cache's `fenced`).
     * The count materializes both caches for the prepare handoff. */
   private def q117Arts(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val pairs = graft.Scratch.fenced(minhashPairs(s, dir)
-      .select(col("doc_a").as("src"), col("doc_b").as("dst")))
-    val standing = graft.Scratch.fenced(componentsOf(pairs))
+    val pairs = graft.Scratch.cache(minhashPairs(s, dir)
+      .select(col("doc_a").as("src"), col("doc_b").as("dst")), fenced = true)
+    val standing = graft.Scratch.cache(componentsOf(pairs), fenced = true)
     standing.count()
     (pairs, standing)
   }
@@ -2772,8 +2772,8 @@ object DedupOps {
     * sign-LSH banding. */
   private def q123Arts(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val banding = graft.Scratch.sizedFenced(embBandedFor(s, dir, lit(true)))
-    val standing = graft.Scratch.sizedFenced(cappedIndexBuckets(banding, Q91Cap))
+    val banding = graft.Scratch.cache(embBandedFor(s, dir, lit(true)), sized = true, fenced = true)
+    val standing = graft.Scratch.cache(cappedIndexBuckets(banding, Q91Cap), sized = true, fenced = true)
     standing.count()
     (banding, standing)
   }
@@ -2826,13 +2826,13 @@ object DedupOps {
     * recurring takedown body. */
   private[graft] def cappedClusterArtifacts(sig: DataFrame, banded: DataFrame,
       cap: Int): (DataFrame, DataFrame, DataFrame) = {
-    val idx = graft.Scratch.sized(cappedIndexBuckets(banded, cap))
+    val idx = graft.Scratch.cache(cappedIndexBuckets(banded, cap), sized = true)
     val cand = idx.where(size(col("ids")) >= 2)
       .select(explode(bucketPairsUdf(col("ids"))).as("p"))
       .select(col("p._1").as("doc_a"), col("p._2").as("doc_b")).distinct()
-    val pairs = graft.Scratch.sized(verifiedPairs(sig, cand)
-      .select(col("doc_a").as("src"), col("doc_b").as("dst")))
-    (idx, pairs, graft.Scratch.sized(componentsOf(pairs)))
+    val pairs = graft.Scratch.cache(verifiedPairs(sig, cand)
+      .select(col("doc_a").as("src"), col("doc_b").as("dst")), sized = true)
+    (idx, pairs, graft.Scratch.cache(componentsOf(pairs), sized = true))
   }
 
   /** CAPPED-pipeline takedown — the composition [[q117]] documents as
@@ -2900,10 +2900,10 @@ object DedupOps {
     // Scratch-scoped: the candidate relation feeds both the broadcast
     // probe below and the verify joins — uncached, the banding
     // semi-join + self-join would run twice.
-    val revealedCand = graft.Scratch.sized(mem.as("a").join(mem.as("b"),
+    val revealedCand = graft.Scratch.cache(mem.as("a").join(mem.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
           col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b")).distinct())
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b")).distinct(), sized = true)
     // Prune the signature table to the candidate docs BEFORE the
     // verify joins (the q51 deferred-verify pattern): the candidate
     // set is batch-bounded (demoted buckets × ≤cap members), so the
@@ -2916,9 +2916,9 @@ object DedupOps {
     // collect below and the broadcast semi-join — uncached, the pid
     // collect evaluated the union+distinct a second time inside the
     // timed takedown body.
-    val probeIds = graft.Scratch.sized(
+    val probeIds = graft.Scratch.cache(
       revealedCand.select(col("doc_a").as("doc_id"))
-        .union(revealedCand.select(col("doc_b").as("doc_id"))).distinct())
+        .union(revealedCand.select(col("doc_b").as("doc_id"))).distinct(), sized = true)
     // Scratch-scoped: verifiedPairs joins this twice (the doc_a and
     // doc_b sides), and each join re-ran the corpus-sized store scan
     // that produces it — measured at 2M docs via the r15 partitioned-
@@ -2945,60 +2945,60 @@ object DedupOps {
     // pid collect) — so the drop side runs on a separate thread and
     // its actions OVERLAP the reveal side's (guide §2.6: overlap
     // independent jobs; the takedown's wall time was the SUM of the
-    // two sides' action latencies at every register scale). The join
-    // back is the Await below, before the merge consumes both.
-    val rmF = scala.concurrent.Future {
-      graft.Scratch.sizedFenced(removeFromComponents(standing, pairs,
-        removed.select(col("doc_id").as("id"))))
-    }(scala.concurrent.ExecutionContext.global)
-    val pidsOpt = sigPidSize.map { w =>
-      probeIds.select(floor(col("doc_id") / w).as("pid"))
-        .distinct().collect().map(_.getLong(0)).toIndexedSeq
-    }
+    // two sides' action latencies at every register scale). Both sides
+    // are joined before the merge consumes them.
     val survPairs = pairs
       .join(removed.select(col("doc_id").as("src")), Seq("src"), "left_anti")
       .join(removed.select(col("doc_id").as("dst")), Seq("dst"), "left_anti")
       .select(col("src"), col("dst"))
-    if (pidsOpt.exists(_.isEmpty)) {
-      // NO-REVEAL SHORT-CIRCUIT (r21 optimization, guide §2.4 "don't
-      // compute things you throw away"): the collected pid list is
-      // empty iff probeIds — the distinct endpoints of revealedCand —
-      // is empty, i.e. this batch demoted no bucket with ≥2 survivors.
-      // Then the revealed (verified ⊆ candidate) pair set is empty by
-      // construction, so the verify pipeline (signature-store scan,
-      // prune, two verify joins, the fence) AND the final
-      // mergeComponents would all run over provably empty relations:
-      // mergeComponents(rm, ∅) contracts no edges, computes an empty
-      // remap, and returns rm's rows unchanged (its left joins against
-      // the empty remap coalesce every label to itself). The takedown
-      // result IS the drop side. The decision reuses the pid collect
-      // the pruned-scan path already pays — zero extra actions — and
-      // is data-adaptive (a batch that demotes nothing at ANY scale),
-      // not a scale-factor constant. CappedRemoveSpec's crafted
-      // corpora keep the non-empty branch proven; q124's oracle gates
-      // both branches cross-engine.
-      val rm = scala.concurrent.Await.result(rmF,
-        scala.concurrent.duration.Duration.Inf)
-      (postIdx, survPairs, rm)
-    } else {
-      val sigScan = pidsOpt match {
-        case Some(pids) => sig.where(col("pid").isin(pids: _*)).drop("pid")
-        case None => sig
+    val (rm, revealedOpt) = graft.Scratch.overlap(
+      graft.Scratch.cache(removeFromComponents(standing, pairs,
+        removed.select(col("doc_id").as("id"))), sized = true, fenced = true), {
+      val pidsOpt = sigPidSize.map { w =>
+        probeIds.select(floor(col("doc_id") / w).as("pid"))
+          .distinct().collect().map(_.getLong(0)).toIndexedSeq
       }
-      val sigPruned = graft.Scratch.sized(
-        sigScan.join(broadcast(probeIds), Seq("doc_id"), "left_semi"))
-      // Both inputs to the final merge are cached AND plan-fenced
-      // (Scratch.fenced): the connected-components machinery inside
-      // mergeComponents issues many actions over a deep pipeline, and
-      // with the full takedown lineage attached each action would
-      // re-ANALYZE the whole pipeline's plan — measured 12.8 s of pure
-      // driver planning over empty relations at sf0.1; fenced, each
-      // action plans a single RDD leaf.
-      val revealed = graft.Scratch.sizedFenced(verifiedPairs(sigPruned, revealedCand)
-        .select(col("doc_a").as("src"), col("doc_b").as("dst")))
-      val rm = scala.concurrent.Await.result(rmF,
-        scala.concurrent.duration.Duration.Inf)
-      (postIdx, survPairs.unionByName(revealed), mergeComponents(rm, revealed))
+      if (pidsOpt.exists(_.isEmpty)) {
+        // NO-REVEAL SHORT-CIRCUIT (r21 optimization, guide §2.4 "don't
+        // compute things you throw away"): the collected pid list is
+        // empty iff probeIds — the distinct endpoints of revealedCand —
+        // is empty, i.e. this batch demoted no bucket with ≥2 survivors.
+        // Then the revealed (verified ⊆ candidate) pair set is empty by
+        // construction, so the verify pipeline (signature-store scan,
+        // prune, two verify joins, the fence) AND the final
+        // mergeComponents would all run over provably empty relations:
+        // mergeComponents(rm, ∅) contracts no edges, computes an empty
+        // remap, and returns rm's rows unchanged (its left joins against
+        // the empty remap coalesce every label to itself). The takedown
+        // result IS the drop side. The decision reuses the pid collect
+        // the pruned-scan path already pays — zero extra actions — and
+        // is data-adaptive (a batch that demotes nothing at ANY scale),
+        // not a scale-factor constant. CappedRemoveSpec's crafted
+        // corpora keep the non-empty branch proven; q124's oracle gates
+        // both branches cross-engine.
+        None
+      } else {
+        val sigScan = pidsOpt match {
+          case Some(pids) => sig.where(col("pid").isin(pids: _*)).drop("pid")
+          case None => sig
+        }
+        val sigPruned = graft.Scratch.cache(
+          sigScan.join(broadcast(probeIds), Seq("doc_id"), "left_semi"), sized = true)
+        // Both inputs to the final merge are cached AND plan-fenced:
+        // the connected-components machinery inside mergeComponents
+        // issues many actions over a deep pipeline, and with the full
+        // takedown lineage attached each action would re-ANALYZE the
+        // whole pipeline's plan — measured 12.8 s of pure driver
+        // planning over empty relations at sf0.1; fenced, each action
+        // plans a single RDD leaf.
+        Some(graft.Scratch.cache(verifiedPairs(sigPruned, revealedCand)
+          .select(col("doc_a").as("src"), col("doc_b").as("dst")), sized = true, fenced = true))
+      }
+    })
+    revealedOpt match {
+      case None => (postIdx, survPairs, rm)
+      case Some(revealed) =>
+        (postIdx, survPairs.unionByName(revealed), mergeComponents(rm, revealed))
     }
   }
 
@@ -3021,7 +3021,7 @@ object DedupOps {
     * touched partitions' files; the rest are plan-fenced caches: the
     * takedown body issues many actions (index pass, reveal probe, two
     * CC phases), and each would otherwise re-analyze the signature
-    * pipeline's full plan (see Scratch.fenced). The cascading counts
+    * pipeline's full plan (see Scratch.cache's `fenced`). The cascading counts
     * materialize the caches for the prepare handoff. */
   /** Partition-count target for the q124 signature store: the CCVBPART
     * layout (r15's doc_id-range partitioning evidence), now the
@@ -3044,7 +3044,7 @@ object DedupOps {
     * q141's range derivation, so the recurring takedown bodies never
     * pay the scan — without this, q141's registered body READ MORE
     * than q124's (the max scan cost more rows than the prune saved,
-    * measured by ExplainR17's first census). */
+    * measured by the r17 recordsRead census of both bodies). */
   private val maxDocIdMemo =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   registerMemo(maxDocIdMemo)
@@ -3079,12 +3079,12 @@ object DedupOps {
       cap: Int = Q88Cap)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, Long) = {
     val (sig0, banded0) = sigBanded(s, dir)
-    val sig = graft.Scratch.fenced(sig0)
-    val banded = graft.Scratch.fenced(banded0)
+    val sig = graft.Scratch.cache(sig0, fenced = true)
+    val banded = graft.Scratch.cache(banded0, fenced = true)
     val (idx0, pairs0, standing0) = cappedClusterArtifacts(sig, banded, cap)
-    val idx = graft.Scratch.sizedFenced(idx0)
-    val pairs = graft.Scratch.sizedFenced(pairs0)
-    val standing = graft.Scratch.sizedFenced(standing0)
+    val idx = graft.Scratch.cache(idx0, sized = true, fenced = true)
+    val pairs = graft.Scratch.cache(pairs0, sized = true, fenced = true)
+    val standing = graft.Scratch.cache(standing0, sized = true, fenced = true)
     sig.count(); banded.count(); idx.count(); pairs.count(); standing.count()
     // The takedown's signature relation is the PARTITIONED STORE (read
     // back from disk, unfenced — the point is the prunable file scan),
@@ -3219,8 +3219,8 @@ object DedupOps {
     * that the signature store's partition prune FIRES inside the
     * driver-gated body: demotions fire at this cap (3 at sf0.01), the
     * probe set's pids cover only the range's neighborhood, and the
-    * store scan reads a partition subset (ExplainR17 censuses
-    * recordsRead on this registered body), where q124's hash-spread
+    * store scan reads a partition subset (r17 recordsRead census
+    * of this registered body), where q124's hash-spread
     * batch touches every partition (its documented floor). The oracle
     * is the same capped rebuild over the survivors — outside-range
     * docs — so the driver's hash gate proves the pruned takedown ==

@@ -138,8 +138,8 @@ object EpochOps {
     // exactly what q145 publishes as stores between epochs anyway.
     val (retF1m, retC1m) =
       Analytic.mergeRetention(retF, retC, batch, eagerNd = eagerCohort)
-    val retF1 = graft.Scratch.sized(retF1m)
-    val retC1 = graft.Scratch.sized(retC1m)
+    val retF1 = graft.Scratch.cache(retF1m, sized = true)
+    val retC1 = graft.Scratch.cache(retC1m, sized = true)
     // ONE cohort slice (r20 optimization, guide §2.4): the session
     // erase, funnel erase, and both retention activity relations all
     // consume the requested users' events — previously each derived
@@ -160,10 +160,11 @@ object EpochOps {
     // exchange per epoch. Cached-plan partitioning is pinned (AQE
     // does not re-partition cached plans), so the elision holds on
     // every consumer. Rows are unchanged.
-    val cohort = graft.Scratch.sized(
+    val cohort = graft.Scratch.cache(
       Analytic.cohortEvents(eventStore, requests)
-        .repartition(col("user_id")))
-    // MATERIALIZED EAGERLY (r21, probed by ProbeCachePart): an
+        .repartition(col("user_id")), sized = true)
+    // MATERIALIZED EAGERLY (r21 probe of a sized cache's reported
+    // partitioning before and after its first action): an
     // AQE-compiled cache reports UnknownPartitioning while
     // unmaterialized — consumers planned before the build re-exchange,
     // silently undoing the shared-exchange device above. Once built,
@@ -285,29 +286,25 @@ object EpochOps {
       (sig, banded, idx, pairs, standing, pidSize)) = arts
     // ONE batch scan (cached; all three folds consume it) and ONE
     // privacy feed (the bounded store; broadcast into every erase).
-    val batch = graft.Scratch.sized(e.where(col("ts") >= cut))
-    val requests = graft.Scratch.sized(requestStore(s, dir))
+    val batch = graft.Scratch.cache(e.where(col("ts") >= cut), sized = true)
+    val requests = graft.Scratch.cache(requestStore(s, dir), sized = true)
     // The behavioral side's eager work (the cohort/nd materializing
     // counts plus its plan analysis) and the takedown's eager CC
     // action chain are data-independent until taggedEpoch, yet both
     // serialize driver-action latency — so they compose on separate
     // threads (guide §2.6, the q146 side-overlap device applied
     // INSIDE the epoch body).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val behF = Future {
-      behavioralEpoch(sessSt, funSt, retF, retC, batch, e, requests)
-    }
-    // The day's TAKEDOWN through the capped artifacts (q141's range
-    // batch; the store scan prunes to the range's partitions).
-    val (lo, hi) = DedupOps.q141Range(s, dir)
-    val removedDocs = t(s, dir, "documents")
-      .where(col("doc_id") >= lo && col("doc_id") < hi)
-      .select(col("doc_id"))
-    val comps = DedupOps.removeFromCappedCluster(idx, banded, sig,
-      pairs, standing, removedDocs, DedupOps.Q141Cap, Some(pidSize))
-    val (sess2, fun2, _, retC2) =
-      Await.result(behF, scala.concurrent.duration.Duration.Inf)
+    val ((sess2, fun2, _, retC2), comps) = graft.Scratch.overlap(
+      behavioralEpoch(sessSt, funSt, retF, retC, batch, e, requests), {
+        // The day's TAKEDOWN through the capped artifacts (q141's range
+        // batch; the store scan prunes to the range's partitions).
+        val (lo, hi) = DedupOps.q141Range(s, dir)
+        val removedDocs = t(s, dir, "documents")
+          .where(col("doc_id") >= lo && col("doc_id") < hi)
+          .select(col("doc_id"))
+        DedupOps.removeFromCappedCluster(idx, banded, sig,
+          pairs, standing, removedDocs, DedupOps.Q141Cap, Some(pidSize))
+      })
     taggedEpoch(sess2, fun2, retC2, comps)
   }
 
@@ -416,12 +413,12 @@ object EpochOps {
       val (sessSt, funSt, retF, retC,
         (sig, banded, idx, pairs, standing, pidSize)) =
         prepTake(s, dir, "prep145")(q145Arts(s, dir))
-      val requests = graft.Scratch.sized(requestStore(s, dir))
+      val requests = graft.Scratch.cache(requestStore(s, dir), sized = true)
       // ---- EPOCH 1: fold day 1 against the pre-cutoff stores, erase
       // the epoch-1 half of the feed (rebuilds see only the events
       // ingested so far), run the range-A takedown.
-      val day1 = graft.Scratch.sized(
-        e.where(col("ts") >= cut1 && col("ts") < cut2))
+      val day1 = graft.Scratch.cache(
+        e.where(col("ts") >= cut1 && col("ts") < cut2), sized = true)
       val soFar = e.where(col("ts") < cut2)
       val req1 = requests.where(epoch1Req)
       // eagerCohort = false: on a recurring run the publishes below
@@ -477,31 +474,27 @@ object EpochOps {
       // contract the compaction relies on, then fold-then-erase
       // against the PUBLISHED state with the epoch-2 half of the
       // feed, the full event store now visible to the rebuilds.
-      val day2 = graft.Scratch.sized(
-        registerFrontEnd(e.where(col("ts") >= cut2), regP, cut2Us))
+      val day2 = graft.Scratch.cache(
+        registerFrontEnd(e.where(col("ts") >= cut2), regP, cut2Us), sized = true)
       val req2 = requests.where(!epoch1Req)
       // Epoch 2's behavioral side and its takedown overlap on separate
       // threads (guide §2.6 — the q140 body's device; the publishes
       // above are complete by here, so day2's register read and the
       // takedown's published-store reads are both safe).
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val behF = Future {
-        behavioralEpoch(sessP, funP, retFP, retCP, day2, e, req2)
-      }
-      // Epoch 2's takedown chains through epoch 1's published cluster
-      // state; the banding store is immutable, so epoch 1's removal
-      // restricts it by predicate (range A is contiguous — no
-      // materialized copy needed).
-      val banded1 = banded.where(!(col("doc_id") >= loA && col("doc_id") < hiA))
-      val (loB, hiB) = DedupOps.q145Range2(s, dir)
-      val remB = t(s, dir, "documents")
-        .where(col("doc_id") >= loB && col("doc_id") < hiB)
-        .select(col("doc_id"))
-      val compsE2 = DedupOps.removeFromCappedCluster(idxP, banded1, sig,
-        pairsP, compsP, remB, DedupOps.Q141Cap, Some(pidSize))
-      val (sessE2, funE2, _, retCE2) =
-        Await.result(behF, scala.concurrent.duration.Duration.Inf)
+      val ((sessE2, funE2, _, retCE2), compsE2) = graft.Scratch.overlap(
+        behavioralEpoch(sessP, funP, retFP, retCP, day2, e, req2), {
+          // Epoch 2's takedown chains through epoch 1's published
+          // cluster state; the banding store is immutable, so epoch 1's
+          // removal restricts it by predicate (range A is contiguous —
+          // no materialized copy needed).
+          val banded1 = banded.where(!(col("doc_id") >= loA && col("doc_id") < hiA))
+          val (loB, hiB) = DedupOps.q145Range2(s, dir)
+          val remB = t(s, dir, "documents")
+            .where(col("doc_id") >= loB && col("doc_id") < hiB)
+            .select(col("doc_id"))
+          DedupOps.removeFromCappedCluster(idxP, banded1, sig,
+            pairsP, compsP, remB, DedupOps.Q141Cap, Some(pidSize))
+        })
       taggedEpoch(sessE2, funE2, retCE2, compsE2)
     },
     // The one-shot rebuild over BOTH days' filtered relation: the
@@ -564,10 +557,10 @@ object EpochOps {
     val incV = h60(concat(lit("ingest:"), col("vec_id"))) % 10 === 0
     // Scoped, not fenced — DedupOps.q101Arts' partitioning-
     // preservation note (the merges co-locate on the cached layout).
-    val ti = graft.Scratch.sized(
-      cappedIndexBuckets(bandedFor(s, dir, !incD), Q96Cap))
-    val ei = graft.Scratch.sized(
-      cappedIndexBuckets(embBandedFor(s, dir, !incV), Q91Cap))
+    val ti = graft.Scratch.cache(
+      cappedIndexBuckets(bandedFor(s, dir, !incD), Q96Cap), sized = true)
+    val ei = graft.Scratch.cache(
+      cappedIndexBuckets(embBandedFor(s, dir, !incV), Q91Cap), sized = true)
     ti.count(); ei.count()
     (ti, ei)
   }
@@ -642,18 +635,11 @@ object EpochOps {
       // threads (guide §2.6: overlap independent jobs) instead of
       // paying CC-latency-after-CC-latency. prepTake consumes each
       // side's own tag; the handoff map is concurrent.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val evF = Future {
-        q140Body(s, dir, prepTake(s, dir, "prep146e")(q140Arts(s, dir)))
-      }
-      val inF = Future {
+      val (ev, in) = graft.Scratch.overlap(
+        q140Body(s, dir, prepTake(s, dir, "prep146e")(q140Arts(s, dir))),
         q144Body(s, dir,
           prepTake(s, dir, "prep146i")(DedupOps.q105Arts(s, dir)),
-          prepTake(s, dir, "prep146x")(q144IdxArts(s, dir)))
-      }
-      val ev = Await.result(evF, scala.concurrent.duration.Duration.Inf)
-      val in = Await.result(inF, scala.concurrent.duration.Duration.Inf)
+          prepTake(s, dir, "prep146x")(q144IdxArts(s, dir))))
       // The SKETCH side (r18 VERDICT task 2): the epoch folds the
       // day's per-day sketches into the standing store and expires
       // the aged days in the same dataflow; the slice gates the whole
@@ -722,10 +708,10 @@ object EpochOps {
     val inc1V = h60(concat(lit("ingest:"), col("vec_id"))) % 10 === 0
     // Scoped, not fenced — DedupOps.q101Arts' partitioning-
     // preservation note (the chained merges co-locate on the layout).
-    val ti = graft.Scratch.sized(cappedIndexBuckets(
-      bandedFor(s, dir, !inc1D && !ingest2("doc_id")), Q96Cap))
-    val ei = graft.Scratch.sized(cappedIndexBuckets(
-      embBandedFor(s, dir, !inc1V && !ingest2("vec_id")), Q91Cap))
+    val ti = graft.Scratch.cache(cappedIndexBuckets(
+      bandedFor(s, dir, !inc1D && !ingest2("doc_id")), Q96Cap), sized = true)
+    val ei = graft.Scratch.cache(cappedIndexBuckets(
+      embBandedFor(s, dir, !inc1V && !ingest2("vec_id")), Q91Cap), sized = true)
     ti.count(); ei.count()
     (ti, ei)
   }
@@ -792,9 +778,9 @@ object EpochOps {
       // chain-through-published-store shape, not an in-memory
       // fence). The fence stays around the read-back for plan
       // hygiene: epoch 2's closure issues several actions over it.
-      val published = graft.Scratch.fenced(
+      val published = graft.Scratch.cache(
         plainStore(s, dir, "cl_comps_ingest1")(
-          DedupOps.mergeComponents(standing, day1)))
+          DedupOps.mergeComponents(standing, day1)), fenced = true)
       val merged = DedupOps.mergeComponents(published, day2)
       merged.groupBy(col("comp"))
         .agg(min(col("id")).as("canonical_id"),

@@ -381,7 +381,7 @@ object SimilarityOps {
       // re-executes the whole Lloyd training subtree per branch —
       // invisible on the 2k-vector corpus, 2× the job at 2M vectors
       // (IvfBench / THROUGHPUT.md).
-      val trained = graft.Scratch.scoped(trainCents(e))
+      val trained = graft.Scratch.cache(trainCents(e))
       // Eager: the assignment and probe branches each BROADCAST this
       // plan, and concurrent broadcast jobs race past a lazy persist
       // (both sides recompute the whole Lloyd training before either
@@ -488,7 +488,7 @@ object SimilarityOps {
     // Scratch-persisted: the positive and negative selections are two
     // consumers of the same scored relation — un-persisted, the whole
     // candidate generation + cosine pass runs twice.
-    val scored = graft.Scratch.scoped(scored0)
+    val scored = graft.Scratch.cache(scored0)
     val w = Window.partitionBy(col("anchor_id"))
       .orderBy(col("cos6").desc, col("cand_id").asc)
     val pos = scored.where(col("cos6") >= posMin)

@@ -662,7 +662,7 @@ object TextOps {
       // consumers (df counts, the keep join, per-doc totals) — the
       // uncached form re-scanned + re-shingled the corpus three
       // times (Plans audit, round-9 continuation).
-      val spans = graft.Scratch.scoped(t(s, dir, "documents")
+      val spans = graft.Scratch.cache(t(s, dir, "documents")
         .select(col("doc_id"), tokens(col("text")).as("tk"))
         .select(col("doc_id"), posexplode(expr(
           s"""transform(sequence(0, cast(ceil(size(tk) / ${SpanLen}.0) as int) - 1),
@@ -865,7 +865,7 @@ object TextOps {
     (s, dir) => {
       val tok = t(s, dir, "documents")
         .select(col("doc_id"), tokens(col("text")).as("tk"))
-      val wins = graft.Scratch.scoped(tok
+      val wins = graft.Scratch.cache(tok
         .select(col("doc_id"), posexplode(expr(
           s"""transform(
              |  sequence(0, cast(greatest(0, ceil((size(tk) - $SpanLen) / ${SubStride}.0)) as int)),

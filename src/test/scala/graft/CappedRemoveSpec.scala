@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * RESURRECTED by a revealed edge — all on one crafted corpus whose
   * similarity structure is spelled out in hs sets, then replayed on
   * the real sf corpora at tightened caps where demotion provably
-  * fires (ProbeRemove census). */
+  * fires (r14 bucket-size census). */
 class CappedRemoveSpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = SparkSession.builder()
@@ -131,7 +131,7 @@ class CappedRemoveSpec extends AnyFunSuite {
       val dir = s"/root/testdata/$sf"
       val (sig0, banded0) = queries.DedupOps.sigBanded(spark, dir)
       val sig = sig0
-      val banded = Scratch.scoped(banded0)
+      val banded = Scratch.cache(banded0)
       val removed = banded.select(col("doc_id")).distinct()
         .where(queries.h60(concat(lit("remove:"), col("doc_id"))) % 3 === 0)
       val (idx, pairs, standing) =

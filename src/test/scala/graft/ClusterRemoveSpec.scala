@@ -132,7 +132,7 @@ class ClusterRemoveSpec extends AnyFunSuite {
   for (sf <- Seq("sf0.001", "sf0.01")) {
     test(s"$sf replay: removal equals from-scratch closure over surviving pairs", SlowReplay) {
       val dir = s"/root/testdata/$sf"
-      val pairs = Scratch.scoped(queries.DedupOps.minhashPairs(spark, dir)
+      val pairs = Scratch.cache(queries.DedupOps.minhashPairs(spark, dir)
         .select(col("doc_a").as("src"), col("doc_b").as("dst")))
       val standing = queries.DedupOps.componentsOf(pairs)
       val rem = standing.select(col("id")).distinct()

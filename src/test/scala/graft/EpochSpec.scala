@@ -524,8 +524,8 @@ class EpochSpec extends AnyFunSuite {
     def parts(df: org.apache.spark.sql.DataFrame): Set[Seq[Long]] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
         .groupBy(_._2).values.map(_.map(_._1).sorted).toSet
-    val pub = graft.Scratch.fenced(
-      graft.queries.DedupOps.mergeComponents(standing, m1))
+    val pub = graft.Scratch.cache(
+      graft.queries.DedupOps.mergeComponents(standing, m1), fenced = true)
     assert(parts(pub) == Set(Seq(1L, 2L, 5L), Seq(3L, 4L, 7L)),
       "day 1 must extend both standing components (the bridge's precondition)")
     val chained = graft.queries.DedupOps.mergeComponents(pub, m2)

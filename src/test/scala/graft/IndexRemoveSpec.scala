@@ -123,7 +123,7 @@ class IndexRemoveSpec extends AnyFunSuite {
 
   // sf replays under tightened caps and removal fractions picked so
   // the interesting branches actually fire on the real banding (bucket
-  // census via the ProbeRemove tool: at the registered cap 3 / 10 %
+  // census, r14: at the registered cap 3 / 10 %
   // batch neither corpus reaches demotion — sf0.01's max bucket IS 3 —
   // so cap 2 with a 1-in-3 batch is where tombstones both demote and,
   // on sf0.001, persist). The same h60 "remove:" split family as
@@ -136,7 +136,7 @@ class IndexRemoveSpec extends AnyFunSuite {
       ("sf0.01", 2, 3, true, false))) { // all 3 tombstones demote
     test(s"removal equals from-scratch recompute on $sf (cap $cap, 1/$pct removed)") {
       val dir = s"/root/testdata/$sf"
-      val b = Scratch.scoped(queries.DedupOps.bandedFor(spark, dir, lit(true)))
+      val b = Scratch.cache(queries.DedupOps.bandedFor(spark, dir, lit(true)))
       val removed = b.select(col("doc_id")).distinct()
         .where(queries.h60(concat(lit("remove:"), col("doc_id"))) % pct === 0)
       val standing = buckets(queries.DedupOps.cappedIndexBuckets(b, cap))
@@ -166,14 +166,14 @@ class IndexRemoveSpec extends AnyFunSuite {
   // sign-LSH banding, at the IndexMergeSpec cap split — sf0.01
   // tightened to 12, sf0.1 at the PRODUCTION cap 56 itself — and the
   // registered 10 % takedown. Demotion AND persistence both fire on
-  // the real banding at these points (ProbeRemoveEmb census: 16
+  // the real banding at these points (r14 bucket census: 16
   // demotions / 14 persists at sf0.01 cap 12; 3 / 1 at sf0.1 cap 56);
   // no bucket empties entirely there, so the drop branch stays
   // covered by the text-banding cases and the crafted fixture.
   for ((sf, cap) <- Seq(("sf0.01", 12), ("sf0.1", 56))) {
     test(s"embedding removal equals from-scratch recompute on $sf (cap $cap)") {
       val dir = s"/root/testdata/$sf"
-      val b = Scratch.scoped(queries.DedupOps.embBandedFor(spark, dir, lit(true)))
+      val b = Scratch.cache(queries.DedupOps.embBandedFor(spark, dir, lit(true)))
       val removed = b.select(col("doc_id")).distinct()
         .where(queries.h60(concat(lit("remove:"), col("doc_id"))) % 10 === 0)
       val standing = bucketsI(queries.DedupOps.cappedIndexBuckets(b, cap))

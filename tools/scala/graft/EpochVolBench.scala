@@ -68,8 +68,8 @@ object EpochVolBench {
     // relation, three folds, three erases (fold-then-erase).
     shufWrite.set(0)
     val t1 = System.nanoTime()
-    val batch = Scratch.scoped(e.where(col("ts") >= cut))
-    val requests = Scratch.scoped(
+    val batch = Scratch.cache(e.where(col("ts") >= cut))
+    val requests = Scratch.cache(
       e.where(erased).select(col("user_id")).distinct()
         .select(col("user_id"), reqT.as("req_us")))
     val nReq = requests.count()
@@ -147,7 +147,7 @@ object EpochVolBench {
       f"${(System.nanoTime() - t2) / 1e9}%5.1f s")
 
     val epoch1 = queries.h60(concat(lit("epoch:"), col("user_id"))) % 2 === 0
-    val requestsAll = Scratch.scoped(
+    val requestsAll = Scratch.cache(
       e.where(erased).select(col("user_id")).distinct()
         .select(col("user_id"), reqT.as("req_us")))
     val req1 = requestsAll.where(epoch1)
@@ -156,7 +156,7 @@ object EpochVolBench {
     // Epoch 1 (timed): fold day 1, erase req1, publish.
     shufWrite.set(0)
     val t3 = System.nanoTime()
-    val day1 = Scratch.scoped(e.where(col("ts") >= cut1c && col("ts") < cut2c))
+    val day1 = Scratch.cache(e.where(col("ts") >= cut1c && col("ts") < cut2c))
     val soFar = e.where(col("ts") < cut2c)
     val (sE1, fE1, rFE1, rCE1) = queries.EpochOps.behavioralEpoch(
       spark.read.parquet(s"$scratch/sessC"), spark.read.parquet(s"$scratch/funC"),
@@ -191,7 +191,7 @@ object EpochVolBench {
     shufWrite.set(0)
     val t4 = System.nanoTime()
     val regP = spark.read.parquet(s"$scratch/regP1")
-    val day2 = Scratch.scoped(
+    val day2 = Scratch.cache(
       queries.EpochOps.registerFrontEnd(
         e.where(col("ts") >= cut2c), regP, cut2cUs))
     val (sE2, fE2, _, rCE2) = queries.EpochOps.behavioralEpoch(

@@ -45,14 +45,14 @@ object ExplainR16 {
         recordsRead.addAndGet(sc.stageInfo.taskMetrics.inputMetrics.recordsRead)
     })
     val (sig0, banded0) = DedupOps.sigBanded(spark, dir)
-    val sig = Scratch.fenced(sig0)
-    val banded = Scratch.fenced(banded0)
+    val sig = Scratch.cache(sig0, fenced = true)
+    val banded = Scratch.cache(banded0, fenced = true)
     val nSig = sig.count(); banded.count()
     val cap = 2
     val (idx0, pairs0, standing0) = DedupOps.cappedClusterArtifacts(sig, banded, cap)
-    val idx = Scratch.fenced(idx0)
-    val pairs = Scratch.fenced(pairs0)
-    val standing = Scratch.fenced(standing0)
+    val idx = Scratch.cache(idx0, fenced = true)
+    val pairs = Scratch.cache(pairs0, fenced = true)
+    val standing = Scratch.cache(standing0, fenced = true)
     idx.count(); pairs.count(); standing.count()
     // The REGISTERED store layout (same writer the prepare hook uses).
     val (store, w) = DedupOps.q124SigStore(spark, dir, sig)

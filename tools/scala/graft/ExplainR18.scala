@@ -72,11 +72,11 @@ object ExplainR18 {
       EpochOps.q140Arts(spark, dir)
     val (rowsOld, readOld, wallOld) = censused {
       val e = queries.t(spark, dir, "events")
-      val requestsInline = Scratch.scoped(
+      val requestsInline = Scratch.cache(
         e.where(Analytic.erasedUsers).select(col("user_id")).distinct()
           .select(col("user_id"), Analytic.reqInstantUs.as("req_us")))
       val cut = lit(Analytic.AnalyticCutoff).cast("timestamp")
-      val batch = Scratch.scoped(e.where(col("ts") >= cut))
+      val batch = Scratch.cache(e.where(col("ts") >= cut))
       val (sess2, fun2, _, retC2) = EpochOps.behavioralEpoch(
         sessSt, funSt, retF, retC, batch, e, requestsInline)
       val (lo, hi) = DedupOps.q141Range(spark, dir)

@@ -78,7 +78,7 @@ def main(outdir, n, skew=0.0):
                        f"{1 + i % 28} Jan 2023"])
         if in_gm:
             gm_first = NICKS.get(p["first"], p["first"])
-            gm.append([f"{gm_first} {p['last']}", gm_first, p["last"],
+            gm.append([gm_first, p["last"],
                        p["email"] if rnd.random() < 0.7 else "",
                        "* Work" if i % 4 == 0 else "Home",
                        p["phone"], "Mobile",
@@ -113,13 +113,15 @@ def main(outdir, n, skew=0.0):
         w.writerows(li)
     with open(f"{outdir}/gmail.csv", "w", newline="") as f:
         w = csv.writer(f)
-        w.writerow(["Name", "Given Name", "Family Name",
+        # The Google Contacts export header (the reference parser's and
+        # Sources.gmail's column names).
+        w.writerow(["First Name", "Last Name",
                     "E-mail 1 - Value", "E-mail 1 - Label",
                     "Phone 1 - Value", "Phone 1 - Label",
                     "Address 1 - Street", "Address 1 - City",
                     "Address 1 - Region", "Address 1 - Postal Code",
-                    "Address 1 - Country", "Organization 1 - Name",
-                    "Organization 1 - Title"])
+                    "Address 1 - Country", "Organization Name",
+                    "Organization Title"])
         w.writerows(gm)
     with open(f"{outdir}/contacts.vcf", "w") as f:
         f.write("\n".join(vc) + "\n")
