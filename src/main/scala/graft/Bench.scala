@@ -1,7 +1,45 @@
 package graft
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  // Fixed-instance DEMOS stay registered (and oracle-checked) but are
+  // excluded from the timed loop
+  // (r10 VERDICT task 7): their own descriptions mark them as
+  // pedagogical fixed instances of the scaled operators (q52→q92,
+  // q54→q91, q90→q93), so suite wall-clock tracks production shapes
+  // only. THROUGHPUT.md round 11 records the exclusion for
+  // round-over-round comparability.
+  private val Demos = Set("q52_simhash", "q54_embedding_neardup",
+    "q90_embedding_neardup_clusters")
+
+  /** The registered queries the bench times. */
+  def benched: Map[String, (SparkSession, String) => DataFrame] =
+    SparkEntry.queries.filter { case (n, _) => !Demos(n) }
+
+  private def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  private def str(v: String) = "\"" + v.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** The stdout summary line, kept compact enough to fit a 2,000-char
+    * output tail even with the runner's epilogue after it:
+    * qNN key prefixes (each query name starts with its unique qNN id)
+    * and integer milliseconds per query under `queries_ms` (about
+    * 1.8 kB for 150 queries). `value` stays the suite total in seconds.
+    * `results` maps query names to seconds; `errors` names the queries
+    * that threw. */
+  def compactLine(total: Double, load: (Double, Double), memGb: (Double, Double),
+      results: Map[String, Double], errors: Iterable[String], sfDir: String): String = {
+    val qs = results.map { case (k, v) => str(k.takeWhile(_ != '_')) + ":" + math.round(v * 1000) }
+      .mkString("{", ",", "}")
+    val errs = errors.map(k => str(k.takeWhile(_ != '_'))).mkString("[", ",", "]")
+    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timing":"min_of_2","load":[${fmt(load._1)},${fmt(load._2)}],"mem_gb":[${memGb._1},${memGb._2}],"queries_ms":$qs,"errors":$errs,"sf":${str(sfDir)}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -42,16 +80,6 @@ object Bench {
         "org.apache.hadoop.fs.local.RawLocalFs")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Fixed-instance DEMOS stay registered (and oracle-checked by the
-    // driver's correctness gate) but are excluded from the timed loop
-    // (r10 VERDICT task 7): their own descriptions mark them as
-    // pedagogical fixed instances of the scaled operators (q52→q92,
-    // q54→q91, q90→q93), so suite wall-clock tracks production shapes
-    // only. THROUGHPUT.md round 11 records the exclusion for
-    // round-over-round comparability.
-    val demos = Set("q52_simhash", "q54_embedding_neardup",
-      "q90_embedding_neardup_clusters")
-    val benched = SparkEntry.queries.filter { case (n, _) => !demos(n) }
     // Untimed warmup pass (standard benchmark methodology, cf. JMH):
     // run every query once at the smallest scale factor so Catalyst
     // planning and Janino whole-stage-codegen compilation are warm —
@@ -137,28 +165,15 @@ object Bench {
     // record.
     def full(m: Map[String, Double]) =
       m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    def str(v: String) = "\"" + v.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val qs = full(results)
     val errs = errors.map { case (k, v) => str(k) + ":" + str(v) }.mkString("{", ",", "}")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","timing":"min_of_2","load_avg_start":$load0,"load_avg_end":$load1,"mem_avail_gb_start":$mem0,"mem_avail_gb_end":${memAvailGb()},"queries":$qs,"errors":$errs,"pass1":${full(ok1)},"pass2":${full(ok2)},"sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), line + "\n")
     catch { case _: Throwable => () }
-    // The stdout line the driver parses is kept compact enough to fit
-    // the tail window even with the runner's epilogue after it: qNN
-    // key prefixes (each query name starts with its unique qNN id) and
-    // millisecond precision — ~1 kB for 72 queries. Printed AFTER
-    // spark.stop() so no shutdown logging can push it out of the tail.
-    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val shortQs = results.map { case (k, v) => s"\"" + k.takeWhile(_ != '_') + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val shortErrs = errors.keys.map(k => str(k.takeWhile(_ != '_'))).mkString("[", ",", "]")
+    // Printed AFTER spark.stop() so no shutdown logging can push the
+    // compact line out of the output tail.
     spark.stop()
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timing":"min_of_2","load":[${fmt(load0)},${fmt(load1)}],"mem_gb":[$mem0,${memAvailGb()}],"queries":$shortQs,"errors":$shortErrs,"sf":"$sfDir"}""")
+    println(compactLine(total, (load0, load1), (mem0, memAvailGb()), results, errors.keys, sfDir))
     System.out.flush()
   }
 }

@@ -66,15 +66,22 @@ object Artifacts {
     Pipeline.flatten(merged)
 
   /** Abort when any contact_id is duplicated
-    * (combine_contacts.py:1519-1525). */
-  def assertUniqueIds(contacts: DataFrame): Unit = {
-    val dups = contacts.groupBy(col("contact_id")).count()
-      .where(col("count") > 1)
-      .orderBy(col("contact_id")).limit(5)
-      .collect().map(_.getString(0))
-    if (dups.nonEmpty)
+    * (combine_contacts.py:1519-1525); otherwise return the row total.
+    * One aggregation yields both the total and the number of
+    * duplicated ids; the first five duplicates are collected only to
+    * name them in the error. */
+  def assertUniqueIds(contacts: DataFrame): Long = {
+    val perId = contacts.groupBy(col("contact_id")).count()
+    val r = perId.agg(coalesce(sum(col("count")), lit(0L)),
+      count(when(col("count") > 1, true))).head()
+    if (r.getLong(1) > 0) {
+      val dups = perId.where(col("count") > 1)
+        .orderBy(col("contact_id")).limit(5)
+        .collect().map(_.getString(0))
       throw new IllegalStateException(
         s"duplicate contact_id detected in consolidated output: ${dups.mkString(", ")}")
+    }
+    r.getLong(0)
   }
 
   /** Header + quote-all UTF-8 CSV (the reference's `csv.QUOTE_ALL`
@@ -110,13 +117,26 @@ object Artifacts {
       .csv(path)
   }
 
-  /** The consolidate stage's three artifacts (combine_contacts.py:1562-1568). */
+  /** The consolidate stage's three artifacts (combine_contacts.py:1562-1568);
+    * returns the number of consolidated contacts.
+    *
+    * [[assertUniqueIds]] runs first: it guards the write and, when
+    * `merged` and `lineage` derive from one cached merge (as
+    * `Pipeline.dedupeAndMerge`'s do), materializes that cache, so the
+    * three sinks then only render and write. They are written at the
+    * same time ([[graft.Scratch.overlap]]); a failing sink surfaces
+    * after the other two have ended. */
   def writeConsolidated(merged: Dataset[MergedContact], lineage: Dataset[Lineage],
-      outDir: String, singleFile: Boolean = true): Unit = {
+      outDir: String, singleFile: Boolean = true): Long = {
     val contacts = consolidatedContacts(merged)
-    assertUniqueIds(contacts)
-    writeCsv(contacts, s"$outDir/consolidated_contacts", singleFile = singleFile)
-    writeCsv(consolidatedLineage(lineage), s"$outDir/consolidated_lineage", singleFile = singleFile)
-    writeCsv(flattenedContacts(merged), s"$outDir/flattened_contacts", singleFile = singleFile)
+    val total = assertUniqueIds(contacts)
+    graft.Scratch.overlap(
+      writeCsv(contacts, s"$outDir/consolidated_contacts", singleFile = singleFile),
+      graft.Scratch.overlap(
+        writeCsv(consolidatedLineage(lineage), s"$outDir/consolidated_lineage",
+          singleFile = singleFile),
+        writeCsv(flattenedContacts(merged), s"$outDir/flattened_contacts",
+          singleFile = singleFile)))
+    total
   }
 }

@@ -33,11 +33,10 @@ object ConsolidateMain {
       resolved.inputs("mac_vcf").getOrElse("")).localCheckpoint(true)
     val normalized = Pipeline.normalize(raw, resolved.normalization)
     val (merged, lineage) = Pipeline.dedupeAndMerge(normalized, raw, resolved.dedupe)
-    try {
+    try
       Artifacts.writeConsolidated(merged, lineage, resolved.outputsDir,
         singleFile = resolved.outputSingleFile)
-      merged.count()
-    } finally
+    finally
       // dedupeAndMerge scope-persists intermediates (the pair table on
       // non-native corpora, the merged dataset shared by both sinks);
       // release them here so a long-lived session driving many stage

@@ -1,8 +1,13 @@
 package graft.etl
 
+import graft.Scratch
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import com.univocity.parsers.csv.CsvParser
 
 /** Stages 2-4 as runnable CLIs over the CSV interchange format — the
   * library equivalents of the reference's `contacts-validate`,
@@ -14,27 +19,80 @@ import org.apache.spark.sql.types._
   * between the two implementations. The in-memory typed path
   * (Score/Tag over Dataset[Contact]) remains the composition-friendly
   * API; these mains are the file-interchange surface.
+  *
+  * Each stage CLI does each piece of work once:
+  *  - an artifact read declares its all-string schema from the header
+  *    record, read on the driver ([[artifactSchema]]), so opening an
+  *    artifact runs no schema-inference job;
+  *  - the stage's first output is cached ([[graft.Scratch.cache]]) and
+  *    its second output derives from that cache ([[scoredFrom]],
+  *    [[summaryFrom]], [[targetsFrom]]) instead of re-reading the
+  *    inputs and re-running the first output's plan;
+  *  - the two sinks are written at the same time
+  *    ([[graft.Scratch.overlap]]), and the cache is released when the
+  *    stage ends.
+  * [[validate]], [[confidence]] and [[tag]] themselves stay cache-free
+  * for in-memory callers.
   */
 object Stages {
 
   /** Resolve an artifact written either by this engine (a directory of
     * part files) or by the reference (a plain `<name>.csv`) — the
     * stage CLIs accept both, so any single stage can be swapped
-    * between the two implementations. */
+    * between the two implementations. `dir` may be a local path or
+    * any Hadoop file-system URI (`file:`, `hdfs:`, `s3a:`); it is
+    * resolved through the active session's Hadoop configuration. */
   def artifactPath(dir: String, name: String): String = {
-    val d = new java.io.File(dir, name)
-    if (d.exists) d.getPath else s"$dir/$name.csv"
+    val d = new Path(dir, name)
+    val conf = SparkSession.active.sparkContext.hadoopConfiguration
+    if (d.getFileSystem(conf).exists(d)) d.toString else s"$dir/$name.csv"
   }
 
+  /** The reference's reader options: `header`, RFC-4180 quotes, and
+    * quoted cells that span lines. */
+  private val ReadOptions =
+    Map("header" -> "true", "escape" -> "\"", "multiLine" -> "true")
+
   /** All-string artifact read matching the reference's
-    * `dtype=str, keep_default_na=False` (QUOTE_ALL, RFC-4180 quotes). */
+    * `dtype=str, keep_default_na=False` (QUOTE_ALL, RFC-4180 quotes).
+    * The schema is declared ([[artifactSchema]]), not inferred, so the
+    * read submits no job. */
   def readArtifactCsv(spark: SparkSession, path: String): DataFrame = {
     val df = spark.read
-      .option("header", "true")
-      .option("escape", "\"")
-      .option("multiLine", "true")
+      .options(ReadOptions)
+      .schema(artifactSchema(spark, path))
       .csv(path)
     df.na.fill("")
+  }
+
+  /** The all-`StringType` schema Spark's header inference gives for the
+    * artifact at `path`, read on the driver from one header record:
+    * that of the plain file, or of the first data file (in name order)
+    * of a part-file directory, skipping `_`- and `.`-prefixed entries
+    * (`_SUCCESS`, `.crc` checksums). Column names follow Spark's own
+    * rules (`CSVUtils.makeSafeHeader`): a blank name becomes
+    * `_c<i>`, and duplicate names (case-insensitively, unless
+    * `spark.sql.caseSensitive`) become `<name><i>`. Every artifact
+    * carries a header, even an empty one; a directory without a data
+    * file is an error. */
+  private def artifactSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val opts = new CSVOptions(ReadOptions, false, spark.conf.get("spark.sql.session.timeZone"))
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val file =
+      if (!fs.getFileStatus(p).isDirectory) p
+      else fs.listStatus(p).toSeq
+        .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+          !s.getPath.getName.startsWith("."))
+        .map(_.getPath).sortBy(_.getName).headOption
+        .getOrElse(throw new IllegalArgumentException(
+          s"artifact directory $path holds no data file"))
+    val header = CSVUtils.readHeaderLine(file, opts, conf)
+      .map(new CsvParser(opts.asParserSettings).parseLine).getOrElse(Array.empty[String])
+    val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
+    StructType(CSVUtils.makeSafeHeader(header, caseSensitive, opts)
+      .map(StructField(_, StringType)))
   }
 
   // ---- channel-string / JSON parsers (validate_quality.py:21-88) ----
@@ -143,6 +201,12 @@ object Stages {
     size(filter(entries, a => a.getField("street") =!= "" &&
       (a.getField("city") =!= "" || a.getField("postal_code") =!= "")))
 
+  /** The flattened artifact's channel-presence bits, as the validation
+    * report names them. */
+  private val PresentCols = Seq("home_email_present", "work_email_present",
+    "home_phone_present", "work_phone_present",
+    "home_address_present", "work_address_present")
+
   /** validation_report + contact_quality_scored from the consolidated
     * artifacts (validate_quality.py:107-233). */
   def validate(contacts: DataFrame, flattened: DataFrame,
@@ -154,7 +218,6 @@ object Stages {
       (trim(col("work_phone")) =!= "").cast("int").as("work_phone_present"),
       (trim(col("home_address")) =!= "").cast("int").as("home_address_present"),
       (trim(col("work_address")) =!= "").cast("int").as("work_address_present"))
-    val presentCols = flat.columns.filter(_ != "contact_id")
     val base = contacts
       .withColumn("_em", emailEntries(col("emails")))
       .withColumn("_ph", phoneEntries(col("phones")))
@@ -172,7 +235,7 @@ object Stages {
           .when(col("phone_valid_count") > 0, w.phonePartial).otherwise(0) +
         when(col("addr_valid_count") > 0, w.addressAny).otherwise(0))
       .join(flat, Seq("contact_id"), "left")
-      .na.fill(0, presentCols)
+      .na.fill(0, PresentCols)
     val report = base.select(
       col("contact_id"), col("full_name"), col("company"), col("title"),
       trim(col("department")).as("department"), col("linkedin_url"),
@@ -187,13 +250,18 @@ object Stages {
       col("home_phone_present"), col("work_phone_present"),
       col("home_address_present"), col("work_address_present"),
       col("quality_score"))
+    (report, scoredFrom(contacts, report))
+  }
+
+  /** contact_quality_scored: the contacts with the validation report's
+    * metric columns (validate_quality.py:222-233). */
+  def scoredFrom(contacts: DataFrame, report: DataFrame): DataFrame = {
     val metricCols = Seq("email_valid_count", "email_total",
       "phone_valid_count", "phone_total", "addr_valid_count", "addr_total",
-      "quality_score", "department_missing") ++ presentCols
-    val scored = contacts.join(
+      "quality_score", "department_missing") ++ PresentCols
+    contacts.join(
       report.select((Seq(col("contact_id")) ++ metricCols.map(col)): _*),
       Seq("contact_id"), "left")
-    (report, scored)
   }
 
   // ---- stage 3: confidence -----------------------------------------
@@ -257,22 +325,27 @@ object Stages {
     val report = withScore.select(
       (contacts.columns.toIndexedSeq.map(col) :+ col("confidence_score") :+
         col("confidence_bucket")): _*)
+    (report, summaryFrom(report))
+  }
+
+  /** confidence_summary: the count and share of each confidence bucket
+    * of a confidence report, in fixed bucket order. */
+  def summaryFrom(report: DataFrame): DataFrame = {
     // Fixed bucket order incl. zero-count rows; half-even (bround)
     // pcts match pandas' numpy rounding (confidence_report.py:239-262).
     val counts = report.groupBy(col("confidence_bucket").as("bucket"))
       .agg(count(lit(1)).as("count"))
-    val spark = contacts.sparkSession
+    val spark = report.sparkSession
     import spark.implicits._
     val buckets = Seq("very_high", "high", "medium", "low")
       .zipWithIndex.toDF("bucket", "ord")
     val total = sum(col("count")).over()
-    val summary = buckets.join(counts, Seq("bucket"), "left")
+    buckets.join(counts, Seq("bucket"), "left")
       .na.fill(0, Seq("count"))
       .withColumn("pct", when(col("count") === 0, lit(0.0)).otherwise(
         bround(col("count").cast("double") / total.cast("double") * 100.0, 2)))
       .orderBy(col("ord"))
       .select(col("bucket"), col("count"), col("pct"))
-    (report, summary)
   }
 
   // ---- stage 4: tag -------------------------------------------------
@@ -303,10 +376,16 @@ object Stages {
       (contacts.columns.toIndexedSeq.map(col) :+ col("confidence_score") :+
         col("tags") :+ col("relationship_category") :+
         col("notes_blob") :+ col("referral_priority_score")): _*)
-    val targets = out.orderBy(col("referral_priority_score").desc,
-      col("confidence_score").desc, col("contact_id"))
-    (out, targets)
+    (out, targetsFrom(out))
   }
+
+  /** The referral ranking: highest priority, then highest confidence,
+    * then contact_id. */
+  val TargetOrder: Seq[Column] = Seq(col("referral_priority_score").desc,
+    col("confidence_score").desc, col("contact_id"))
+
+  /** referral_targets: the tagged contacts in [[TargetOrder]]. */
+  def targetsFrom(tagged: DataFrame): DataFrame = tagged.orderBy(TargetOrder: _*)
 }
 
 /** `contacts-validate` equivalent: consolidated CSVs in, validation
@@ -317,11 +396,14 @@ object ValidateMain {
     val resolved = Config.load(Config.Cli(), yamlText)
     val contacts = Stages.readArtifactCsv(spark, Stages.artifactPath(dir, "consolidated_contacts"))
     val flattened = Stages.readArtifactCsv(spark, Stages.artifactPath(dir, "flattened_contacts"))
-    val (report, scored) = Stages.validate(contacts, flattened, resolved.quality)
-    Artifacts.writeCsv(report, s"$dir/validation_report",
-      singleFile = resolved.outputSingleFile)
-    Artifacts.writeCsv(scored, s"$dir/contact_quality_scored",
-      singleFile = resolved.outputSingleFile)
+    try {
+      val report = Scratch.cache(Stages.validate(contacts, flattened, resolved.quality)._1)
+      Scratch.overlap(
+        Artifacts.writeCsv(report, s"$dir/validation_report",
+          singleFile = resolved.outputSingleFile),
+        Artifacts.writeCsv(Stages.scoredFrom(contacts, report), s"$dir/contact_quality_scored",
+          singleFile = resolved.outputSingleFile))
+    } finally Scratch.releaseAll()
   }
 
   def main(args: Array[String]): Unit = {
@@ -349,17 +431,20 @@ object ConfidenceMain {
     val contacts = Stages.readArtifactCsv(spark, Stages.artifactPath(dir, "consolidated_contacts"))
     val validation = Stages.readArtifactCsv(spark, Stages.artifactPath(dir, "validation_report"))
     val flattened = Stages.readArtifactCsv(spark, Stages.artifactPath(dir, "flattened_contacts"))
-    val (report, summary) = Stages.confidence(contacts, validation, flattened)
-    Artifacts.writeCsv(report, s"$dir/confidence_report",
-      singleFile = resolved.outputSingleFile)
-    // Fixed bucket order is part of the artifact contract; re-sorted
-    // inside the single output partition (repartition(1) has no
-    // ordering guarantee — see Artifacts.writeCsv). The 4-row summary
-    // stays single-file in scale mode too: it IS driver-sized.
-    Artifacts.writeCsv(summary, s"$dir/confidence_summary",
-      sortCols = Seq(when(col("bucket") === "very_high", 0)
-        .when(col("bucket") === "high", 1)
-        .when(col("bucket") === "medium", 2).otherwise(3)))
+    try {
+      val report = Scratch.cache(Stages.confidence(contacts, validation, flattened)._1)
+      Scratch.overlap(
+        Artifacts.writeCsv(report, s"$dir/confidence_report",
+          singleFile = resolved.outputSingleFile),
+        // Fixed bucket order is part of the artifact contract; re-sorted
+        // inside the single output partition (repartition(1) has no
+        // ordering guarantee — see Artifacts.writeCsv). The 4-row summary
+        // stays single-file in scale mode too: it IS driver-sized.
+        Artifacts.writeCsv(Stages.summaryFrom(report), s"$dir/confidence_summary",
+          sortCols = Seq(when(col("bucket") === "very_high", 0)
+            .when(col("bucket") === "high", 1)
+            .when(col("bucket") === "medium", 2).otherwise(3))))
+    } finally Scratch.releaseAll()
   }
 
   def main(args: Array[String]): Unit = {
@@ -390,21 +475,21 @@ object TagMain {
     val confidence = Stages.readArtifactCsv(spark, Stages.artifactPath(dir, "confidence_report"))
     val notes = graft.sources.Sources.gmailNotes(spark, gmailCsv)
       .unionByName(graft.sources.Sources.vcfNotes(spark, macVcf))
-    val (tagged, targets) = Stages.tag(contacts, lineage, notes, confidence, settings)
-    Artifacts.writeCsv(tagged, s"$dir/tagged_contacts", singleFile = singleFile)
-    // referral_targets is a RANKED deliverable: re-assert the ranking
-    // inside the single output partition (same keys as Stages.tag's
-    // orderBy) so the written order never depends on shuffle fetch
-    // order. In scale mode the ranking becomes a global sort whose
-    // range-partitioned part-files concatenate to the ranked order.
-    if (singleFile)
-      Artifacts.writeCsv(targets, s"$dir/referral_targets",
-        sortCols = Seq(col("referral_priority_score").desc,
-          col("confidence_score").desc, col("contact_id")))
-    else
-      Artifacts.writeCsv(targets.orderBy(col("referral_priority_score").desc,
-          col("confidence_score").desc, col("contact_id")),
-        s"$dir/referral_targets", singleFile = false)
+    try {
+      val tagged = Scratch.cache(Stages.tag(contacts, lineage, notes, confidence, settings)._1)
+      Scratch.overlap(
+        Artifacts.writeCsv(tagged, s"$dir/tagged_contacts", singleFile = singleFile),
+        // referral_targets is a RANKED deliverable: the ranking is
+        // imposed inside the single output partition so the written
+        // order never depends on shuffle fetch order. In scale mode the
+        // ranking is a global sort whose range-partitioned part-files
+        // concatenate to the ranked order.
+        if (singleFile)
+          Artifacts.writeCsv(tagged, s"$dir/referral_targets", sortCols = Stages.TargetOrder)
+        else
+          Artifacts.writeCsv(Stages.targetsFrom(tagged), s"$dir/referral_targets",
+            singleFile = false))
+    } finally Scratch.releaseAll()
   }
 
   def main(args: Array[String]): Unit = {
